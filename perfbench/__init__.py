@@ -1,0 +1,1 @@
+"""Standalone benchmark of the engine; see README.md and run.py."""
